@@ -51,47 +51,28 @@ object GraphAlgebra {
   def neighbors(edges: DataFrame, vertex: Long): DataFrame =
     edges.filter(col("src") === vertex).select(col("dst"), col("w"))
 
-  /** Bipartite 2-hop traversal with visited-set semantics: items reachable
-    * from a cohort of src vertices at hop 1 (direct) and hop 2 (through
-    * co-occurring src vertices). Fixed hop budget ⇒ iterated joins, fully
-    * Catalyst-planned.
-    */
-  def khop2(edges: DataFrame, cohort: DataFrame): DataFrame = {
-    val adj = edges.select(col("src"), col("dst"))
-    val c = cohort.toDF("src")
-    val p1 = adj.join(c, "src").select(col("dst")).distinct()
-    val c2 = adj.join(p1, "dst").select(col("src")).distinct()
-    val p2 = adj.join(c2, "src").select(col("dst")).distinct()
-    p2.join(p1.withColumn("h1", lit(1L)), Seq("dst"), "left")
-      .select(col("dst").as("part"), coalesce(col("h1"), lit(2L)).as("hop"))
-  }
-
   /** Hop-budget traversal with min-hop labels and k a RUNTIME parameter —
-    * the reference's k-hop message semantics ([[khop2]] and the registry's
-    * khop_2/khop_3 are the fixed-k SQL-expressible instances; this loops in
-    * Scala like [[bfsHops]]). Bipartite: each hop is context→item, then the
-    * NEWLY-reached items' contexts seed the next hop — true frontier
-    * expansion, so per-hop work is proportional to the frontier, while the
-    * min-hop labeling is provably identical to the full re-expansion the
-    * fixed-k ops do (a context adjacent to a hop-h item is explored at
-    * round h+1 either way). ApiSpec pins khopK(2)/khopK(3) row-identical to
-    * the registry ops.
+    * the reference's k-hop message semantics (the registry's khop_2/khop_3
+    * are the fixed-k SQL-expressible instances; this runs on
+    * [[expandFrontier]] like [[bfsHops]]). Bipartite: hop 1 is the cohort's
+    * own items, then each hop's NEWLY-reached items' contexts seed the next
+    * hop — true frontier expansion, so per-hop work is proportional to the
+    * frontier, while the min-hop labeling is provably identical to the full
+    * re-expansion the fixed-k ops do (a context adjacent to a hop-h item is
+    * explored at round h+1 either way). ApiSpec pins khopK(2)/khopK(3)
+    * row-identical to the registry ops.
     */
   def khopK(edges: DataFrame, cohort: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"khopK needs k >= 1 (got $k): hop 0 is the cohort itself")
     val adj = edges.select(col("src"), col("dst")).cp()
-    var custs = cohort.toDF("src").distinct()
-    var seen: DataFrame = null // (dst, hop = first round reached)
-    for (h <- 1 to k) {
-      val items = adj.join(custs, "src").select(col("dst")).distinct()
-      val fresh = (if (seen == null) items
-        else items.join(seen.select(col("dst")), Seq("dst"), "left_anti"))
-        .cp()
-      val labeled = fresh.select(col("dst"), lit(h.toLong).as("hop"))
-      seen = (if (seen == null) labeled else seen.unionAll(labeled)).cp()
-      if (h < k) custs = adj.join(fresh, "dst").select(col("src")).distinct()
-    }
-    seen.select(col("dst").as("part"), col("hop"))
+    val items = adj.join(cohort.toDF("src").distinct(), "src")
+      .select(col("dst")).distinct().cp()
+    expandFrontier(items, items.count(), 1L, k)(
+        (fresh, h) => fresh.select(col("dst"), lit(h).as("hop"))) { hop =>
+      val custs = adj.join(hop.frontier, "dst").select(col("src")).distinct()
+      adj.join(custs, "src").select(col("dst")).distinct()
+        .join(hop.visited.select(col("dst")), Seq("dst"), "left_anti")
+    }.select(col("dst").as("part"), col("hop"))
   }
 
   /** Triangle count of a canonical pair graph, node-iterator formulation
@@ -181,6 +162,46 @@ object GraphAlgebra {
 
   def hintedAdj(adj: DataFrame, directedEdges: Long): DataFrame =
     if (directedEdges <= AdjacencyBroadcastMaxEdges) broadcast(adj) else adj
+
+  /** What one [[expandFrontier]] step sees: the rows first reached last
+    * hop and the visited frame, each with its row count.
+    */
+  private[graft] final case class Hop(frontier: DataFrame, frontierRows: Long,
+                                      visited: DataFrame, visitedRows: Long) {
+    /** The frontier, broadcast-gated on its (already counted) row count. */
+    def gatedFrontier(maxRows: Long): DataFrame = hinted(frontier, frontierRows, maxRows)
+  }
+
+  /** The first-visit frontier loop behind [[bfsHops]], [[multiBfsHopsPairs]],
+    * [[multiBfsSigmaOn]], [[reachClosure]], [[boundedReach]] and [[khopK]].
+    * `seed` (checkpointed by the caller, `seedRows` rows) is the frontier
+    * at hop `seedHop`, and `label(seed, seedHop)` starts the visited frame.
+    * Each later hop h ≤ `maxHop` runs `step`, which returns the rows first
+    * reached at hop h: the caller's join, dedup and first-visit anti-join
+    * against the visited frame, in the caller's order (the order is a
+    * per-caller measurement, see the callers' notes). The loop checkpoints
+    * those rows and counts them — the count is both the stop test and the
+    * next hop's broadcast-gate size — appends `label(rows, h)` to the
+    * visited frame, and stops after `maxHop` or at the first hop that
+    * reaches nothing new. Hop `maxHop` is appended uncounted, since no
+    * later hop reads its count. Returns the visited frame.
+    */
+  private[graft] def expandFrontier(seed: DataFrame, seedRows: Long, seedHop: Long,
+                                    maxHop: Long)(label: (DataFrame, Long) => DataFrame)(
+                                    step: Hop => DataFrame): DataFrame = {
+    var hop = Hop(seed, seedRows, label(seed, seedHop), seedRows)
+    var h = seedHop + 1
+    while (h <= maxHop && hop.frontierRows > 0) {
+      val next = step(hop).cp()
+      val visited = hop.visited.unionAll(label(next, h))
+      // uncounted cap hop: appending an empty frame would add no rows
+      if (h == maxHop) return visited.cp()
+      val n = next.count()
+      hop = Hop(next, n, if (n == 0) hop.visited else visited.cp(), hop.visitedRows + n)
+      h += 1
+    }
+    hop.visited
+  }
 
   /** Public k-core over a caller-supplied canonical (a < b) pair list:
     * fixed-round peel (see `graph_kcore`'s docstring for why fixed rounds
@@ -399,31 +420,43 @@ object GraphAlgebra {
     */
   def labelPropagation(vertices: DataFrame, pairs: DataFrame, rounds: Int,
                        broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
+    val (start, vote) = lpaRounds(vertices, pairs, broadcastMaxRows)
+    (1 to rounds).foldLeft(start)((labels, _) =>
+        vote(labels).select(col("id"), col("lbl")).cp())
+      .select(col("id"), col("lbl").as("community"))
+  }
+
+  /** The setup and round shared by [[labelPropagation]] and
+    * [[labelPropagationConverged]]: the starting label frame (id, lbl = id)
+    * and one synchronous vote, which maps a label frame to
+    * (id, prev, lbl) and leaves the checkpoint to the caller.
+    */
+  private def lpaRounds(vertices: DataFrame, pairs: DataFrame,
+                        broadcastMaxRows: Long): (DataFrame, DataFrame => DataFrame) = {
     val cp = pairs.select(col("a"), col("b"))
     // clustered on the vote GROUP key `b` — HashPartitioning(b) satisfies
     // the (b, lbl) clustered distribution AND the row_number window's
     // partitionBy(v), so each round is exchange-free past the label join
     val both = Ckpt.cpByKey(
       cp.unionAll(cp.select(col("b").as("a"), col("a").as("b"))), col("b"))
-    var labels = vertices.select(col("part").as("id"), col("part").as("lbl"))
+    val labels = vertices.select(col("part").as("id"), col("part").as("lbl"))
       .cp()
     val nV = labels.count() // label frame stays exactly |V| rows every round
-    for (_ <- 1 to rounds) {
+    labels -> { cur =>
       // tie-break (most frequent label, ties to the SMALLEST) as a hash
       // aggregation — max(struct(c, −lbl)) ≡ the row_number(c desc, lbl
       // asc) = 1 pick, but it stays in the HashPartitioning(b) chain the
       // cpByKey hoisted (both groupBys cluster on v = b) instead of
       // paying a per-round sort-window over the |E|-sized vote frame
-      val top = both.join(hinted(labels, nV, broadcastMaxRows), col("a") === col("id"))
+      val top = both.join(hinted(cur, nV, broadcastMaxRows), col("a") === col("id"))
         .groupBy(col("b").as("v"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("v"))
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("v"), (-col("m.neg")).as("nlbl"))
-      labels = labels.join(top, col("id") === col("v"), "left")
-        .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
-        .cp()
+      cur.join(top, col("id") === col("v"), "left")
+        .select(col("id"), col("lbl").as("prev"),
+          coalesce(col("nlbl"), col("lbl")).as("lbl"))
     }
-    labels.select(col("id"), col("lbl").as("community"))
   }
 
   /** [[labelPropagation]] iterated to CONVERGENCE: stops the round loop
@@ -446,27 +479,13 @@ object GraphAlgebra {
                                 maxRounds: Int = 50,
                                 broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     require(maxRounds >= 1, s"labelPropagationConverged needs maxRounds >= 1 (got $maxRounds)")
-    val cp = pairs.select(col("a"), col("b"))
-    val both = Ckpt.cpByKey(
-      cp.unionAll(cp.select(col("b").as("a"), col("a").as("b"))), col("b"))
-    var labels = vertices.select(col("part").as("id"), col("part").as("lbl"))
-      .cp()
-    val nV = labels.count() // label frame stays exactly |V| rows every round
+    val (start, vote) = lpaRounds(vertices, pairs, broadcastMaxRows)
+    var labels = start
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxRounds) {
       round += 1
-      // same hash-agg tie-break as [[labelPropagation]] (max(struct) ≡
-      // row_number pick, no per-round sort-window)
-      val top = both.join(hinted(labels, nV, broadcastMaxRows), col("a") === col("id"))
-        .groupBy(col("b").as("v"), col("lbl")).agg(count(lit(1)).as("c"))
-        .groupBy(col("v"))
-        .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
-        .select(col("v"), (-col("m.neg")).as("nlbl"))
-      val upd = labels.join(top, col("id") === col("v"), "left")
-        .select(col("id"), col("lbl").as("prev"),
-          coalesce(col("nlbl"), col("lbl")).as("lbl"))
-        .cp()
+      val upd = vote(labels).cp()
       changed = upd.filter(col("lbl") =!= col("prev")).count()
       labels = upd.select(col("id"), col("lbl"))
     }
@@ -1174,22 +1193,12 @@ object GraphAlgebra {
   def reachClosure(seeds: DataFrame, flow: DataFrame,
                    broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     val fl = Ckpt.cpByKey(flow.select(col("from"), col("to")), col("from"))
-    var visited = seeds.select(col("id")).distinct().cp()
-    var frontier = visited
-    var frontierRows = frontier.count()
-    while (frontierRows > 0) {
-      val next = fl.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("from") === col("id"))
+    val seed = seeds.select(col("id")).distinct().cp()
+    expandFrontier(seed, seed.count(), 0L, Long.MaxValue)((fresh, _) => fresh) { hop =>
+      fl.join(hop.gatedFrontier(broadcastMaxRows), col("from") === col("id"))
         .select(col("to").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .cp()
-      frontierRows = next.count()
-      if (frontierRows > 0) {
-        visited = visited.unionAll(next).cp()
-        frontier = next
-      }
+        .join(hop.visited, Seq("id"), "left_anti")
     }
-    visited
   }
 
   /** Longest-path levels of a DAG given as (src, dst) rows: level(v) = 0
@@ -1231,19 +1240,9 @@ object GraphAlgebra {
     levels
   }
 
-  /** Bounded BFS WITHOUT GraphX: frontier expansion in pure DataFrames —
-    * per hop one broadcast join of the (small) frontier into the
-    * checkpointed adjacency, anti-join against the visited set, stop early
-    * when the frontier empties. Output (id, dist) for reachable vertices,
-    * dist = minimum hop count (identical to GraphX ShortestPaths and the
-    * recursive BFS oracle).
-    *
-    * Scale shape: the frontier broadcast is GATED per hop on the frontier
-    * row count — which is free, because the loop already counts the
-    * checkpointed frontier to detect termination. A small-world frontier
-    * that balloons toward |V| automatically degrades to a shuffle join
-    * instead of OOMing on the hint.
-    */
+  /** Most sources [[multiBfsHops]] packs into its one-BIGINT bitmask. */
+  val MsBfsMaxSources: Int = 60
+
   /** MULTI-source BFS hop distances: [[bfsHops]] generalized to a frame of
     * source vertices — one frontier loop computes distances from EVERY
     * source simultaneously (the landmark pattern: k-source BFS costs one
@@ -1261,11 +1260,10 @@ object GraphAlgebra {
     * ≤ |V| rows instead of ≤ k·|V|. First-reach bits are
     * `contrib & ~visited`, so per (source, vertex) exactly one hop emits
     * the bit — the exploded (src, id, dist) output is row-identical to
-    * the pair-keyed spelling (ApiSpec pins it). Above the source cap (or
-    * with duplicate source rows) the pair-keyed loop below runs unchanged.
+    * the pair-keyed spelling (ApiSpec's two `multiBfsHops` tests pin it
+    * against [[multiBfsHopsPairs]]). Above the source cap (or with
+    * duplicate source rows) the pair-keyed loop below runs unchanged.
     */
-  val MsBfsMaxSources: Int = 60
-
   def multiBfsHops(edgesBoth: DataFrame, sources: DataFrame, maxHops: Int,
                    broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     // probe the source list: landmark frames are tiny by construction
@@ -1348,36 +1346,20 @@ object GraphAlgebra {
                                        maxHops: Int,
                                        broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     val adj = edgesBoth.select(col("a"), col("b")).cp()
-    var dist = sources.select(col("src"), col("src").as("id"),
-      lit(0L).as("dist")).cp()
-    var frontier = dist.select(col("src"), col("id"))
-    var frontierRows = frontier.count()
-    var h = 1L
-    var done = frontierRows == 0
-    while (h <= maxHops && !done) {
+    val seed = sources.select(col("src"), col("src").as("id")).cp()
+    expandFrontier(seed, seed.count(), 0L, maxHops)(
+        (fresh, h) => fresh.select(col("src"), col("id"), lit(h).as("dist"))) { hop =>
       // NOTE (r15): distinct-FIRST is deliberate — the partial aggregate
       // collapses the Σdeg expansion map-side before any join, and an
       // A/B of the anti-before-distinct spelling (broadcast visited set)
       // measured consistently SLOWER here (the per-hop broadcast build of
       // the growing visited frame cost more than the smaller dedup saved;
       // the σ-folding sibling multiBfsSigma is where that reorder wins)
-      val next = adj.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("a") === col("id"))
+      adj.join(hop.gatedFrontier(broadcastMaxRows), col("a") === col("id"))
         .select(col("src"), col("b").as("id")).distinct()
-        .join(dist.select(col("src"), col("id")), Seq("src", "id"),
+        .join(hop.visited.select(col("src"), col("id")), Seq("src", "id"),
           "left_anti")
-        .cp()
-      frontierRows = next.count()
-      if (frontierRows == 0) done = true
-      else {
-        dist = dist
-          .unionAll(next.select(col("src"), col("id"), lit(h).as("dist")))
-          .cp()
-        frontier = next.select(col("src"), col("id"))
-        h += 1
-      }
     }
-    dist
   }
 
   /** [[multiBfsHops]] carrying Brandes path counts: per (src, id) the hop
@@ -1407,38 +1389,22 @@ object GraphAlgebra {
   private[graft] def multiBfsSigmaOn(adj: DataFrame, sources: DataFrame,
                                      maxHops: Int,
                                      broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    var state = sources.select(col("src"), col("src").as("id"),
-      lit(0L).as("dist"), lit(1L).as("sigma")).cp()
-    var frontier = state.select(col("src"), col("id"), col("sigma"))
-    var frontierRows = frontier.count()
-    var stateRows = frontierRows // gates the visited-side broadcast
-    var h = 1L
-    var done = frontierRows == 0
-    while (h <= maxHops && !done) {
+    val seed = sources.select(col("src"), col("src").as("id"),
+      lit(1L).as("sigma")).cp()
+    expandFrontier(seed, seed.count(), 0L, maxHops)((fresh, h) => fresh.select(
+        col("src"), col("id"), lit(h).as("dist"), col("sigma"))) { hop =>
       // first-visit anti BEFORE the σ fold (identical: visited (src, b)
       // groups are removed WHOLE either way, so the per-group sums are
       // untouched), broadcast-gated so it runs map-side and the fold's
       // exchange carries only new-frontier groups (r15, guide §2.3/§3.1)
-      val next = adj.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("a") === col("id"))
+      adj.join(hop.gatedFrontier(broadcastMaxRows), col("a") === col("id"))
         .select(col("src"), col("b"), col("sigma"))
-        .join(hinted(state.select(col("src"), col("id").as("b")), stateRows,
-          broadcastMaxRows), Seq("src", "b"), "left_anti")
+        .join(hinted(hop.visited.select(col("src"), col("id").as("b")),
+          hop.visitedRows, broadcastMaxRows), Seq("src", "b"), "left_anti")
         .groupBy(col("src"), col("b"))
         .agg(sum(col("sigma")).as("sigma"))
         .select(col("src"), col("b").as("id"), col("sigma"))
-        .cp()
-      frontierRows = next.count()
-      if (frontierRows == 0) done = true
-      else {
-        state = state.unionAll(next.select(col("src"), col("id"),
-          lit(h).as("dist"), col("sigma"))).cp()
-        stateRows += frontierRows
-        frontier = next.select(col("src"), col("id"), col("sigma"))
-        h += 1
-      }
     }
-    state
   }
 
   /** Brandes backward pass over a [[multiBfsSigma]] frame: per-(src, id)
@@ -1697,31 +1663,30 @@ object GraphAlgebra {
           .cast("long").as("c"))
   }
 
+  /** Bounded BFS WITHOUT GraphX: frontier expansion in pure DataFrames —
+    * per hop one broadcast join of the (small) frontier into the
+    * checkpointed adjacency, anti-join against the visited set, stop early
+    * when the frontier empties. Output (id, dist) for reachable vertices,
+    * dist = minimum hop count (identical to GraphX ShortestPaths and the
+    * recursive BFS oracle).
+    *
+    * Scale shape: the frontier broadcast is GATED per hop on the frontier
+    * row count — which is free, because the loop already counts the
+    * checkpointed frontier to detect termination. A small-world frontier
+    * that balloons toward |V| automatically degrades to a shuffle join
+    * instead of OOMing on the hint.
+    */
   def bfsHops(edgesBoth: DataFrame, src: Long, maxHops: Int,
               broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     val s = edgesBoth.sparkSession
     import s.implicits._
     val adj = edgesBoth.select(col("a"), col("b")).cp()
-    var dist = Seq((src, 0L)).toDF("id", "dist").cp()
-    var frontier = dist.select(col("id"))
-    var frontierRows = 1L
-    var h = 1L
-    var done = false
-    while (h <= maxHops && !done) {
-      val next = adj.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("a") === col("id"))
+    expandFrontier(Seq(src).toDF("id").cp(), 1L, 0L, maxHops)(
+        (fresh, h) => fresh.select(col("id"), lit(h).as("dist"))) { hop =>
+      adj.join(hop.gatedFrontier(broadcastMaxRows), col("a") === col("id"))
         .select(col("b").as("id")).distinct()
-        .join(dist.select(col("id")), Seq("id"), "left_anti")
-        .cp()
-      frontierRows = next.count() // doubles as the termination check
-      if (frontierRows == 0) done = true
-      else {
-        dist = dist.unionAll(next.select(col("id"), lit(h).as("dist"))).cp()
-        frontier = next
-        h += 1
-      }
+        .join(hop.visited.select(col("id")), Seq("id"), "left_anti")
     }
-    dist
   }
 
   /** Time-decayed popularity: score = Σ value · exp((day − max_day)/τ days),
@@ -1766,19 +1731,14 @@ object GraphAlgebra {
     require(maxHops >= 1 && maxHops <= 4,
       s"boundedReach supports 1-4 hops (got $maxHops)")
     val base = edges.select(col("src"), col("dst")).distinct().cp()
-    var reach = base.withColumn("hops", lit(1L))
-    var frontier = base
-    for (h <- 2 to maxHops) {
-      val nxt = frontier.select(col("src"), col("dst").as("m"))
+    expandFrontier(base, base.count(), 1L, maxHops)(
+        (fresh, h) => fresh.withColumn("hops", lit(h))) { hop =>
+      hop.frontier.select(col("src"), col("dst").as("m"))
         .join(base.select(col("src").as("m"), col("dst")), Seq("m"))
         .select(col("src"), col("dst")).distinct()
-        .join(reach.select(col("src"), col("dst")), Seq("src", "dst"),
+        .join(hop.visited.select(col("src"), col("dst")), Seq("src", "dst"),
           "left_anti")
-        .cp()
-      reach = reach.unionAll(nxt.withColumn("hops", lit(h.toLong))).cp()
-      frontier = nxt
     }
-    reach
   }
 
   /** Pattern-match bindings over a (src, dst, w) adjacency — the

@@ -596,10 +596,11 @@ object GraphOps {
     * improved, so the per-round dist maps are identical (the classic
     * Bellman-Ford queue optimization) while the broadcast frame stays
     * frontier-sized instead of growing toward all reachable vertices.
-    * Scale caveat (same as [[graft.api.GraphAlgebra.bfsHops]]): the
-    * broadcast hint assumes the frontier stays far below |V|; a graph
-    * whose frontier approaches |V| should drop the hint (shuffle join)
-    * or take the GraphX Pregel path.
+    * Scale caveat: `broadcast(frontier)` below is UNGATED (unlike
+    * [[graft.api.GraphAlgebra.bfsHops]], which gates its hint on the
+    * frontier row count it already pays for), so it assumes the frontier
+    * stays far below |V|; a graph whose frontier approaches |V| should
+    * drop the hint (shuffle join) or take the GraphX Pregel path.
     */
   val graphWsssp: Q = (s, dir) => {
     import s.implicits._

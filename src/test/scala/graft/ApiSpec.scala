@@ -13,6 +13,18 @@ class ApiSpec extends SparkSpec {
 
   private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, sf)
 
+  private def cpBoth = {
+    import spark.implicits._
+    val cp = ops.GraphOps.copurchase(spark, sf).select($"a", $"b")
+    cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
+  }
+
+  private def landmarks(n: Int) = {
+    import spark.implicits._
+    Tables.part(spark, sf).orderBy($"p_partkey").limit(n)
+      .select($"p_partkey".as("src"))
+  }
+
   test("GraphAlgebra.project + triangles on a hand-built incidence") {
     import spark.implicits._
     // contexts: {1:a,b,c} {2:a,b} -> pairs (a,b)w2 (a,c)w1 (b,c)w1 -> 1 triangle
@@ -330,7 +342,7 @@ class ApiSpec extends SparkSpec {
   test("GraphAlgebra iterative ops: gated-off broadcast path is bit-identical") {
     import spark.implicits._
     // broadcastMaxRows = 0 forces the plain-join (100 TB) path; results
-    // must match the broadcast-hinted default exactly for all three ops
+    // must match the broadcast-hinted default exactly for every op
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (1L, 6L)).toDF("a", "b")
     val both = pairs.unionAll(pairs.select($"b".as("a"), $"a".as("b")))
     val vertices = (1L to 7L).toDF("part")
@@ -345,6 +357,62 @@ class ApiSpec extends SparkSpec {
     assert(
       rows(GraphAlgebra.bfsHops(both, src = 1L, maxHops = 3, broadcastMaxRows = 0)) ===
       rows(GraphAlgebra.bfsHops(both, src = 1L, maxHops = 3)))
+    val sources = Seq(1L, 4L, 7L).toDF("src")
+    assert(
+      rows(GraphAlgebra.multiBfsHopsPairs(both, sources, maxHops = 3, broadcastMaxRows = 0)) ===
+      rows(GraphAlgebra.multiBfsHopsPairs(both, sources, maxHops = 3)))
+    assert(
+      rows(GraphAlgebra.multiBfsSigma(both, sources, maxHops = 3, broadcastMaxRows = 0)) ===
+      rows(GraphAlgebra.multiBfsSigma(both, sources, maxHops = 3)))
+    val flow = both.select($"a".as("from"), $"b".as("to"))
+    val seeds = Seq(2L, 5L).toDF("id")
+    assert(
+      rows(GraphAlgebra.reachClosure(seeds, flow, broadcastMaxRows = 0)) ===
+      rows(GraphAlgebra.reachClosure(seeds, flow)))
+  }
+
+  test("GraphAlgebra.reachClosure: runs to the fixpoint through a cycle, never past it") {
+    import spark.implicits._
+    // chain 1->2->...->12 closed by 12->1 (a cycle longer than any hop cap
+    // the bounded traversals use), 13->1 into the cycle, 14->13 feeding 13
+    val flow = ((1L to 11L).map(v => (v, v + 1)) ++
+      Seq((12L, 1L), (13L, 1L), (14L, 13L))).toDF("from", "to")
+    def closure(seed: Long*) = {
+      val got = GraphAlgebra.reachClosure(seed.toDF("id"), flow)
+      assert(got.columns.toSeq === Seq("id"))
+      val ids = got.collect().map(_.getLong(0)).toSeq
+      assert(ids.length === ids.distinct.length, "each vertex is visited once")
+      ids.toSet
+    }
+    // the whole cycle, the seed included; 13 and 14 only point INTO it
+    assert(closure(1L) === (1L to 12L).toSet)
+    assert(closure(7L) === (1L to 12L).toSet)
+    // duplicate seeds collapse; an unreachable-from-the-cycle vertex seeds
+    // its own closure, which then takes in the whole cycle
+    assert(closure(14L, 14L) === (1L to 14L).toSet)
+    // a vertex with no out-edges reaches only itself
+    assert(closure(99L) === Set(99L))
+  }
+
+  test("multiBfsHops bitmask path is row-identical to the pair-keyed spelling") {
+    val both = cpBoth
+    val lm = landmarks(8)
+    val mask = api.GraphAlgebra.multiBfsHops(both, lm, maxHops = 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val pairs = api.GraphAlgebra.multiBfsHopsPairs(both, lm, maxHops = 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(mask === pairs)
+    assert(mask.nonEmpty)
+  }
+
+  test("multiBfsHops falls back to the pair spelling above the source cap, identically") {
+    val both = cpBoth
+    val lm = landmarks(api.GraphAlgebra.MsBfsMaxSources + 4) // > 60 sources
+    val auto = api.GraphAlgebra.multiBfsHops(both, lm, maxHops = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val pairs = api.GraphAlgebra.multiBfsHopsPairs(both, lm, maxHops = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(auto === pairs)
   }
 
   test("GraphAlgebra.khopK: parameterized traversal equals the fixed-k registry ops") {

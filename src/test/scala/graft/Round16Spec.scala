@@ -21,27 +21,6 @@ class Round16Spec extends SparkSpec {
       .select($"p_partkey".as("src"))
   }
 
-  test("multiBfsHops bitmask path is row-identical to the pair-keyed spelling") {
-    val both = cpBoth
-    val lm = landmarks(8)
-    val mask = api.GraphAlgebra.multiBfsHops(both, lm, maxHops = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val pairs = api.GraphAlgebra.multiBfsHopsPairs(both, lm, maxHops = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(mask === pairs)
-    assert(mask.nonEmpty)
-  }
-
-  test("multiBfsHops falls back to the pair spelling above the source cap, identically") {
-    val both = cpBoth
-    val lm = landmarks(api.GraphAlgebra.MsBfsMaxSources + 4) // > 60 sources
-    val auto = api.GraphAlgebra.multiBfsHops(both, lm, maxHops = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val pairs = api.GraphAlgebra.multiBfsHopsPairs(both, lm, maxHops = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(auto === pairs)
-  }
-
   test("brandesBackward (shared-DAG) deltas equal brandesDeltasOn; DAG credits equal the 3-way join") {
     import api.Ckpt._
     val both = cpBoth.cp()
